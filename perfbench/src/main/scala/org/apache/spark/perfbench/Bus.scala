@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which is private to Spark: the traced run
+  * reads its listener's aggregates only after every posted event has been
+  * delivered.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
